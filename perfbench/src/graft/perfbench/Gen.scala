@@ -4,13 +4,16 @@ package graft.perfbench
   * unit-variance centres in `dim` dimensions, each point its centre plus
   * isotropic noise of standard deviation `spread`. Clusters overlap enough
   * that an ivf index probing a few of its cells misses some true
-  * neighbours, so recall@10 sits below 1 and can move. Every stream
+  * neighbours, so recall@10 sits below 1 and can move. The centres are
+  * one fixed layout and the workload seed draws the points: every seed
+  * samples the same distribution, so index cells and buckets, and the
+  * work an operation does, vary little from seed to seed. Every stream
   * (corpus, queries, operation sequence) has its own generator derived
   * from the workload seed, so adding draws to one stream never shifts
   * another. */
-final class Mixture(seed: Long, val dim: Int, clusters: Int, spread: Double) {
+final class Mixture(layoutSeed: Long, val dim: Int, clusters: Int, spread: Double) {
   private val centres: Array[Array[Double]] = {
-    val r = Gen.rng(seed, 0)
+    val r = Gen.rng(layoutSeed, 0)
     Array.fill(clusters)(Array.fill(dim)(r.nextGaussian()))
   }
 
@@ -27,7 +30,10 @@ object Gen {
   val Clusters = 96
   val Spread = 1.25
 
-  def mixture(seed: Long): Mixture = new Mixture(seed, Dim, Clusters, Spread)
+  /** Seed of the fixed centre layout. */
+  val LayoutSeed = 1L
+
+  val mixture: Mixture = new Mixture(LayoutSeed, Dim, Clusters, Spread)
 
   /** An independent generator for `stream` of workload `seed`. */
   def rng(seed: Long, stream: Int): java.util.Random =

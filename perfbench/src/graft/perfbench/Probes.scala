@@ -25,7 +25,7 @@ object Probes {
     val emb = corpus.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq
       .toDF("vec_id", "embedding").repartition(h.cores).cache()
     val r = Gen.rng(h.seed, 6)
-    val mix = Gen.mixture(h.seed)
+    val mix = Gen.mixture
     val kq = mix.draw(r, KernelQ)
     val qs = h.frame(kq).cache()
     val oq = h.frame(mix.draw(r, OperatorQ)).cache()

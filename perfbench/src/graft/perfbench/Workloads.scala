@@ -53,7 +53,7 @@ final class BulkSearch(h: Harness) {
   import BulkSearch._
   import Workloads._
 
-  private val mix = Gen.mixture(h.seed)
+  private val mix = Gen.mixture
   private val corpus = mix.draw(Gen.rng(h.seed, 1), N)
   private val frames = { val r = Gen.rng(h.seed, 3); Array.fill(Frames)(mix.draw(r, Q)) }
   private val families = Seq("flat" -> 1L, "ivf" -> 2L, "lsh" -> 3L)
@@ -65,19 +65,17 @@ final class BulkSearch(h: Harness) {
     val chunkFiles = mutable.ArrayBuffer[Int]()
     val (db, frameDfs) = h.timedSetup {
       val db = h.api("open")(new GraftDb(h.spark, root))
-      families.foreach { case (ty, lib) =>
-        h.api("createLibrary")(db.createLibrary(lib, ty, Dim, ty))
-        h.api("upsertChunks")(db.upsertChunks(rows(lib, ids.zip(corpus))))
-      }
+      families.foreach { case (ty, lib) => h.api("createLibrary")(db.createLibrary(lib, ty, Dim, ty)) }
+      // one batch fills all three libraries
+      h.api("upsertChunks")(db.upsertChunks(families.flatMap { case (_, lib) => rows(lib, ids.zip(corpus)) }))
       h.api("trainIndex")(db.trainIndex(2L, Centroids, TrainIters))
       h.api("buildIndex")(db.buildIndex(2L))
       h.api("buildLshIndex")(db.buildLshIndex(3L))
       val dfs = frames.map(h.frame)
-      // one warm-up cycle keeps the first batches' code generation and
-      // class loading out of the window
-      families.foreach { case (ty, lib) =>
-        results((ty, 0)) = h.searchAll(db, s"searchAll.$ty", lib, dfs(0), K, NProbes)
-      }
+      // warm-up cycles keep the first batches' code generation, class
+      // loading and JIT compilation out of the window
+      for (c <- 0 until WarmCycles; (ty, lib) <- families)
+        results((ty, c % Frames)) = h.searchAll(db, s"searchAll.$ty", lib, dfs(c % Frames), K, NProbes)
       (db, dfs)
     }
     var i = 0
@@ -108,12 +106,12 @@ final class BulkSearch(h: Harness) {
     }
     val recall = recalls.map { case (ty, rs) => ty -> rs.sum / rs.length }
     val med = families.map { case (ty, _) => ty -> h.median(s"search.$ty") }.toMap
-    // the window ends on a whole cycle, so each family weighs the same
-    val batches = families.flatMap { case (ty, _) => h.samples(s"search.$ty") }
     Outcome(
       e2e = Seq(
         ("op_p50_ms", Stats.geomean(med.values.toSeq), "ms"),
-        ("read_qps", batches.length * Q * 1000.0 / batches.sum, "1/s"),
+        // queries per second of a median flat → ivf → lsh cycle: medians,
+        // so one slow batch does not move it
+        ("read_qps", families.length * Q * 1000.0 / med.values.sum, "1/s"),
         ("recall_at_10", recall("ivf"), "ratio")),
       detail = families.map { case (ty, _) => (s"${ty}_qps", Q * 1000.0 / med(ty), "1/s") } ++ Seq(
         ("ivf_recall_at_10", recall("ivf"), "ratio"),
@@ -134,6 +132,8 @@ object BulkSearch {
   val Frames = 4
   /** Queries per flat frame checked against the driver-side exact top-k. */
   val CheckQueries = 8
+  /** flat → ivf → lsh cycles run in the set-up, before the window. */
+  val WarmCycles = 2
 }
 
 /** The interactive facade: one ivf library with a standing index, driven
@@ -144,7 +144,7 @@ final class ServeMixed(h: Harness) {
   import ServeMixed._
   import Workloads._
 
-  private val mix = Gen.mixture(h.seed)
+  private val mix = Gen.mixture
   private val corpus = mix.draw(Gen.rng(h.seed, 1), N)
 
   def run(): Outcome = {
@@ -240,8 +240,11 @@ final class ServeMixed(h: Harness) {
     Outcome(
       e2e = Seq(
         ("op_p50_ms", Stats.geomean(med.values.toSeq), "ms"),
-        // the window ends on a whole deck: 4 warm searches to 3 after a write
-        ("read_qps", searches.length * 1000.0 / searches.sum, "1/s"),
+        // searches per second at the median latency of each kind, weighted
+        // as a deck mixes them: 4 warm searches to 3 after a write
+        ("read_qps", ServeOps.Searches * 1000.0 / (
+          (ServeOps.Searches - ServeOps.Writes.length) * med("search.warm") +
+            ServeOps.Writes.length * med("search.after_write")), "1/s"),
         ("recall_at_10", recalls.sum / recalls.length, "ratio")),
       detail = Seq(
         ("search_p50_ms", Stats.median(searches.toSeq), "ms"),
@@ -279,7 +282,7 @@ final class IngestBuild(h: Harness) {
   import IngestBuild._
   import Workloads._
 
-  private val mix = Gen.mixture(h.seed)
+  private val mix = Gen.mixture
   private val corpus = mix.draw(Gen.rng(h.seed, 1), N)
   private val probes = mix.draw(Gen.rng(h.seed, 3), ProbeQ)
 

@@ -51,10 +51,9 @@ object HelpersTest {
   }
 
   private def seeds(): Unit = {
-    def corpus(seed: Long) = Gen.mixture(seed).draw(Gen.rng(seed, 1), 50)
+    def corpus(seed: Long) = Gen.mixture.draw(Gen.rng(seed, 1), 50)
     def ops(seed: Long, n: Int): Seq[String] = {
-      val mix = Gen.mixture(seed)
-      new ServeOps(seed, mix, 0L until 100L, 99L).take(n).map {
+      new ServeOps(seed, Gen.mixture, 0L until 100L, 99L).take(n).map {
         case ServeOp.Search(q) => "search " + q.mkString(",")
         case ServeOp.Upsert(rs) => "upsert " + rs.map { case (id, v) => s"$id:${v.mkString(",")}" }.mkString(";")
         case ServeOp.Delete(ids) => "delete " + ids.mkString(",")
@@ -84,7 +83,7 @@ object HelpersTest {
     }
     check("deletes only name live ids and upserts mix new and live ids") {
       val live = scala.collection.mutable.Set[Long]((0L until 100L): _*)
-      new ServeOps(3, Gen.mixture(3), 0L until 100L, 99L).take(500).forall {
+      new ServeOps(3, Gen.mixture, 0L until 100L, 99L).take(500).forall {
         case ServeOp.Delete(ids) => val ok = ids.forall(live); ids.foreach(live.remove); ok
         case ServeOp.Upsert(rs) =>
           val (again, fresh) = rs.map(_._1).partition(live)
